@@ -452,11 +452,6 @@ def feed_url_of(h: int) -> str:
     return f"https://host{h}.example.org/feed.xml"
 
 
-def feed_folds(h: int) -> bool:
-    """True iff host h's feed contributes title/description to the fold."""
-    return h % 2 == 0 and h != 8
-
-
 def xml_of_host(h: int) -> str:
     title = f"Feed host {h}"
     desc = f"Host {h} dataset hub"

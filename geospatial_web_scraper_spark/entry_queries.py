@@ -59,7 +59,7 @@ from .operators.lm import bigram_lm_scores, pmi_collocations
 from .operators.profile import group_quantiles, heavy_hitters
 from .operators.sessions import sessionize
 from .operators.relevance import bm25_oracle_sql, bm25_scores
-from .operators.extract import extract_links_udf, extract_meta_udf
+from .operators.extract import extract_links_flat, extract_meta_udf
 from .operators.multimodal import decode_features
 from .operators.politeness import priority_expr
 from .plans.bfs import CrawlEngine
@@ -1205,18 +1205,15 @@ def q_crawl_robots_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_x1_extract_links(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Link-extraction kernel surface (X1): the fused Arrow pass over
-    fetchable pages' html, exploded to (src_url, pos, url, is_geo) —
-    mailto/tel/bad-href drops, relative resolution and geo
+    """Link-extraction kernel surface (X1): the flat Arrow link pass over
+    fetchable pages' html, one (src_url, dst_url, is_geo) row per distinct
+    link — mailto/tel/bad-href drops, relative resolution and geo
     classification all value-checked against the formula edge oracle."""
-    pages = _fetchable_pages(spark)
-    links = pages.withColumn(
-        "_links", extract_links_udf(F.col("html"), F.col("url"))
-    ).select(F.col("url").alias("src_url"), F.explode("_links").alias("link"))
+    links = extract_links_flat(_fetchable_pages(spark), carry_cols=["url"])
     return links.select(
-        "src_url",
-        F.col("link.url").alias("dst_url"),
-        F.col("link.is_geo").alias("is_geo"),
+        F.col("url").alias("src_url"),
+        F.col("link_url").alias("dst_url"),
+        F.col("link_is_geo").alias("is_geo"),
     ).distinct()
 
 

@@ -4,7 +4,7 @@ The text inside ``<a>`` tags pointing AT a page is the classic external
 description signal: search engines rank with it, and LLM corpus builds
 use aggregated anchor text as weak labels / queries for retrieval
 training (MS MARCO-style) and as document context. The reference's
-kernel extracts hrefs only (internal/metadata/metadata.go keeps link
+kernel extracts hrefs only (internal/crawler/crawler.go:97-131 keeps link
 URLs, drops their text — SURVEY §8 X1); this operator is the
 beyond-the-reference analytic that keeps the text and inverts the edge:
 for every TARGET url, what does the web call it?

@@ -18,7 +18,7 @@ float summation order — and the keep decision is an integer comparison
 rounded value. The feature hash is the md5-60-bit family every dedup
 operator here uses (bit-identical in any SQL engine, so a DuckDB oracle
 value-checks the whole pass; reference parity note: the Go engine has no
-learned filtering — `internal/scraper/scraper.go` keeps every fetched
+learned filtering — `internal/crawler/crawler.go` keeps every fetched
 page — this is a beyond-the-reference corpus-pipeline stage).
 
 Scale shape: with ``n_buckets`` under the Janino literal budget the whole

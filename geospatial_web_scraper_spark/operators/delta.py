@@ -19,10 +19,10 @@ one shuffle of (url, 32-hex-char) pairs. Feed the ``changed`` slice to
 and the ``removed`` slice to the snapshot store as tombstones.
 
 Reference parity note: the Go engine keeps no cross-run history — its
-``visitedList`` dies with the process (reference internal/scraper/
-scraper.go:16) — so snapshot diffing is the first thing a persistent
-deployment of it would need; this operator is that stage, built on the
-same first-wins URL-key contract as F1.
+``Manager.seen`` map dies with the process (reference
+internal/crawler/structs.go:11-24) — so snapshot diffing is the first
+thing a persistent deployment of it would need; this operator is that
+stage, built on the same first-wins URL-key contract as F1.
 """
 
 from __future__ import annotations

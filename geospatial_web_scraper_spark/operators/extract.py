@@ -1,37 +1,38 @@
-"""HTML extraction as vectorized pandas/Arrow UDFs (the only Python on the
-hot path, batched through Arrow — never row-at-a-time serde).
+"""HTML extraction as Arrow-batched passes (the only Python on the hot path,
+batched through Arrow — never row-at-a-time serde).
 
-``extract_links_udf`` is the X1 UDTF (reference ``crawler.go:97-131``):
-one page row in → array of link structs out, exploded engine-side with
-``posexplode`` so document order survives as an explicit column.
+Every row-emitting pass goes through one helper, :func:`_map_rows`: a
+single ``mapInArrow`` that reads each input column once per batch and
+builds one output ``RecordBatch`` from what a per-row function returns.
+
+* :func:`extract_links_flat` is X1 (reference ``crawler.go:97-131``): one
+  page row in, one flat ``(carried…, link_url, link_pos, link_is_geo)`` row
+  per link out, in document order;
+* :func:`extract_round_outputs` is the engine's fused per-round pass
+  (downloads, links and optional metadata from one scan);
+* :func:`extract_meta_with_feeds` is C10, metadata with the offline
+  RSS/Atom fold.
 
 ``extract_meta_udf`` is X2 (reference ``metadata.go:40-220``): returns the
 title/description/keywords struct whose ``description`` is the
 byte-identical extracted text per url.
 
-Both delegate per-document work to the shared pure-Python kernel
+All of them delegate per-document work to the shared pure-Python kernel
 (:mod:`..kernel`), which the single-threaded oracle also uses — Spark adds
 the distribution, Arrow the batching; the semantics live in one place.
 """
 
 from __future__ import annotations
 
+from urllib.parse import urljoin
+
 import pandas as pd
-from pyspark.sql import Column
+import pyarrow as pa
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..kernel import extract_links, extract_metadata
-
-LINK_TYPE = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("is_geo", T.BooleanType()),
-            T.StructField("pos", T.IntegerType()),
-        ]
-    )
-)
+from ..kernel import extract_links, extract_metadata, extract_metadata_with_feeds
 
 META_TYPE = T.StructType(
     [
@@ -42,17 +43,36 @@ META_TYPE = T.StructType(
 )
 
 
-@F.pandas_udf(LINK_TYPE)
-def extract_links_udf(html: pd.Series, base_url: pd.Series) -> pd.Series:
-    out = []
-    for h, u in zip(html, base_url):
-        if h is None or u is None:
-            out.append([])
-            continue
-        out.append(
-            [(l["url"], l["is_geo"], l["pos"]) for l in extract_links(bytes(h), u)]
-        )
-    return pd.Series(out, dtype=object)
+def _map_rows(df, schema: T.StructType, row_fn):
+    """One Arrow pass over ``df``: ``row_fn(*row)`` is called with each
+    input row's values (in ``df.columns`` order) and returns zero or more
+    output tuples laid out as ``schema``. Each input column is converted to
+    Python once per batch, and each batch yields one ``RecordBatch``."""
+    arrow_schema = to_arrow_schema(schema)
+    empty = [()] * len(arrow_schema)
+
+    def gen(batches):
+        for batch in batches:
+            cols = [c.to_pylist() for c in batch.columns]
+            rows = [out for row in zip(*cols) for out in row_fn(*row)]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(vals, type=field.type)
+                    for vals, field in zip(list(zip(*rows)) or empty, arrow_schema)
+                ],
+                schema=arrow_schema,
+            )
+
+    return df.mapInArrow(gen, schema)
+
+
+def _link_rows(html, url, head: tuple, tail: tuple = ()):
+    """The link-row emitter: ``(*head, link_url, link_pos, link_is_geo,
+    *tail)`` per link of the page, in document order."""
+    if html is None or url is None:
+        return ()
+    return [(*head, l["url"], l["pos"], l["is_geo"], *tail)
+            for l in extract_links(html, url)]
 
 
 @F.pandas_udf(T.ArrayType(T.StringType()))
@@ -85,24 +105,13 @@ def extract_meta_udf(html: pd.Series, base_url: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"title": titles, "description": descs, "keywords": kws})
 
 
-@F.pandas_udf(T.StringType())
-def resolve_url_udf(base: pd.Series, href: pd.Series) -> pd.Series:
-    """Go ``base.Parse(href)`` (metadata.go:184): resolved absolute URL,
-    NULL when the base/href pair is unresolvable (the reference's
-    ``continue``)."""
-    from urllib.parse import urljoin
-
-    out = []
-    for b, h in zip(base, href):
-        if b is None or h is None:
-            out.append(None)
-            continue
-        try:
-            out.append(urljoin(b, h))
-        except ValueError:
-            out.append(None)
-    return pd.Series(out, dtype=object)
-
+FEED_HREF_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType()),
+        T.StructField("_xpos", T.IntegerType()),
+        T.StructField("_feed_url", T.StringType()),
+    ]
+)
 
 FEED_META_TYPE = T.StructType(
     [
@@ -113,30 +122,36 @@ FEED_META_TYPE = T.StructType(
 )
 
 
-def extract_meta_with_feeds(pages, feeds, html_col: str = "html",
-                            url_col: str = "url"):
+def extract_meta_with_feeds(pages, feeds):
     """C10 — metadata extraction INCLUDING the secondary RSS/Atom harvest
     (``metadata.go:180-212``), with the 5s-timeout HTTP GET modeled as a
-    join against an offline ``feeds(url, xml)`` table.
+    join against an offline ``feeds(url, xml)`` table; ``pages`` carries
+    ``url`` and ``html``.
 
-    Distributed shape (the 100 TB plan): the xml hrefs are exploded off the
-    pages (tiny rows — no HTML), resolved, equi-joined against the feeds
-    table (broadcast: one feed per HOST, so |feeds| ≪ |pages|), and grouped
-    back per page in document order; then ONE Arrow pass over the pages
-    re-runs the metadata walk and folds the joined feed bodies through the
-    raw string builders (kernel.extract_metadata_with_feeds — shared with
-    the oracle). HTML bytes never shuffle: the join and groupBy move only
-    (url, href, xml) rows, and the final pass inherits the pages scan's
-    partitioning via a frontier-style broadcast join of the small grouped
-    side."""
-    from ..kernel import extract_metadata_with_feeds as _kernel_fold
+    Distributed shape (the 100 TB plan): the xml hrefs are emitted off the
+    pages (tiny rows — no HTML) already resolved, equi-joined against the
+    feeds table (broadcast: one feed per HOST, so |feeds| ≪ |pages|), and
+    grouped back per page in document order; then ONE Arrow pass over the
+    pages re-runs the metadata walk and folds the joined feed bodies
+    through the raw string builders (kernel.extract_metadata_with_feeds —
+    shared with the oracle). HTML bytes never shuffle: the join and groupBy
+    move only (url, pos, feed url, xml) rows, and the final pass inherits the pages
+    scan's partitioning via a frontier-style broadcast join of the small
+    grouped side."""
 
-    hrefs = pages.select(
-        F.col(url_col),
-        F.posexplode(
-            extract_xml_links_udf(F.col(html_col), F.col(url_col))
-        ).alias("_xpos", "_href"),
-    ).withColumn("_feed_url", resolve_url_udf(F.col(url_col), F.col("_href")))
+    def href_rows(url, html):
+        if html is None or url is None:
+            return ()
+        out = []
+        for pos, href in enumerate(extract_metadata(html, url)["xml_links"]):
+            try:
+                feed_url = urljoin(url, href)  # Go base.Parse(href)
+            except ValueError:
+                feed_url = None  # unresolvable: joins no feed
+            out.append((url, pos, feed_url))
+        return out
+
+    hrefs = _map_rows(pages.select("url", "html"), FEED_HREF_SCHEMA, href_rows)
     joined = hrefs.join(
         F.broadcast(
             feeds.select(F.col("url").alias("_feed_url"), F.col("xml").alias("_xml"))
@@ -144,63 +159,39 @@ def extract_meta_with_feeds(pages, feeds, html_col: str = "html",
         "_feed_url",
         "left",
     )
-    grouped = joined.groupBy(url_col).agg(
+    grouped = joined.groupBy("url").agg(
         F.array_sort(
             F.collect_list(F.struct("_xpos", "_feed_url", "_xml"))
         ).alias("_feeds")
     )
-    withf = pages.select(url_col, html_col).join(
-        F.broadcast(grouped), url_col, "left"
-    )
+    withf = pages.select("url", "html").join(F.broadcast(grouped), "url", "left")
 
-    def gen(batches):
-        for pdf in batches:
-            urls, titles, descs = [], [], []
-            col_url = pdf[url_col]
-            col_html = pdf[html_col]
-            col_feeds = pdf["_feeds"]
-            for ridx in range(len(pdf)):
-                h = col_html.iloc[ridx]
-                u = col_url.iloc[ridx]
-                if h is None or u is None:
-                    continue
-                fl = col_feeds.iloc[ridx]
-                lookup = {}
-                if fl is not None:
-                    for s in fl:
-                        if s["_xml"] is not None:
-                            lookup[s["_feed_url"]] = s["_xml"]
-                md = _kernel_fold(bytes(h), u, lookup.get)
-                urls.append(u)
-                titles.append(md["title"])
-                descs.append(md["description"])
-            yield pd.DataFrame(
-                {"url": urls, "title": titles, "description": descs}
-            )
+    def meta_rows(url, html, joined_feeds):
+        if html is None or url is None:
+            return ()
+        lookup = {
+            f["_feed_url"]: f["_xml"]
+            for f in joined_feeds or ()
+            if f["_xml"] is not None
+        }
+        md = extract_metadata_with_feeds(html, url, lookup.get)
+        return ((url, md["title"], md["description"]),)
 
-    return withf.mapInPandas(gen, FEED_META_TYPE)
-
-
-def exploded_links(df, html_col: str = "html", url_col: str = "url") -> "Column":
-    """Convenience: page rows → (page cols…, pos, link struct) rows."""
-    withl = df.withColumn("_links", extract_links_udf(F.col(html_col), F.col(url_col)))
-    return withl.select(
-        *[c for c in df.columns if c != html_col],
-        F.posexplode_outer("_links").alias("pos_in_doc", "link"),
-    )
+    return _map_rows(withf.select("url", "html", "_feeds"), FEED_META_TYPE,
+                     meta_rows)
 
 
 def extract_links_flat(
     df, carry_cols: list[str], html_col: str = "html", url_col: str = "url"
 ):
-    """Hot-path variant: mapInPandas emitting already-exploded FLAT rows
-    (link_url, link_pos, link_is_geo + carried columns).
+    """Hot-path X1: one Arrow pass emitting already-exploded FLAT rows
+    (carried columns + link_url, link_pos, link_is_geo); pages with no
+    links (or a NULL html/url) emit nothing.
 
-    ~2× faster than the nested array<struct> UDF + explode: flat string/int
-    Arrow columns skip the per-row list-of-tuples construction and the
-    nested-type conversion on both sides of the Arrow boundary, and the
-    explode disappears entirely. Same kernel, same semantics (asserted by
-    the engine trace-parity tests)."""
+    Flat string/int Arrow columns skip the nested ``array<struct>``
+    conversion on both sides of the Arrow boundary, and no explode is
+    needed. Same kernel, same semantics as the engine's ``kind=1`` rows
+    (one emitter, asserted by the engine trace-parity tests)."""
     in_fields = {f.name: f for f in df.schema.fields}
     out_schema = T.StructType(
         [in_fields[c] for c in carry_cols]
@@ -210,38 +201,13 @@ def extract_links_flat(
             T.StructField("link_is_geo", T.BooleanType()),
         ]
     )
+    cols = list(dict.fromkeys([html_col, url_col, *carry_cols]))
+    carry_idx = [cols.index(c) for c in carry_cols]
 
-    def gen(batches):
-        for pdf in batches:
-            out: dict[str, list] = {c: [] for c in carry_cols}
-            link_url: list[str] = []
-            link_pos: list[int] = []
-            link_geo: list[bool] = []
-            htmls = pdf[html_col]
-            urls = pdf[url_col]
-            carried = [pdf[c] for c in carry_cols]
-            for ridx in range(len(pdf)):
-                h = htmls.iloc[ridx]
-                u = urls.iloc[ridx]
-                if h is None or u is None:
-                    continue
-                links = extract_links(bytes(h), u)
-                if not links:
-                    continue
-                for link in links:
-                    link_url.append(link["url"])
-                    link_pos.append(link["pos"])
-                    link_geo.append(link["is_geo"])
-                for cidx, cname in enumerate(carry_cols):
-                    out[cname].extend([carried[cidx].iloc[ridx]] * len(links))
-            yield pd.DataFrame(
-                {**out, "link_url": link_url, "link_pos": link_pos,
-                 "link_is_geo": link_geo}
-            )
+    def row(*vals):
+        return _link_rows(vals[0], vals[1], tuple(vals[i] for i in carry_idx))
 
-    return df.select(*dict.fromkeys([*carry_cols, html_col, url_col])).mapInPandas(
-        gen, out_schema
-    )
+    return _map_rows(df.select(*cols), out_schema, row)
 
 
 ROUND_OUT_SCHEMA = T.StructType(
@@ -296,81 +262,25 @@ def extract_round_outputs(fetched, geo_mime_types, max_depth: int,
     response body to ``downloadDir/basename``). Off by default: the bytes
     then ride the round's localCheckpoint, which is exactly what a crawl
     that only needs the manifest should not pay for."""
+    no_link = (None, None, None)  # link_url, link_pos, link_is_geo
+    no_meta = (None, None, None)  # title, text, body
 
-    def gen(batches):
-        for pdf in batches:
-            urls: list = []
-            seqs: list = []
-            depths: list = []
-            kinds: list = []
-            lurl: list = []
-            lpos: list = []
-            lgeo: list = []
-            titles: list = []
-            texts: list = []
-            bodies: list = []
-
-            def emit(u, s, d, kind, l_url=None, l_pos=None, l_geo=None,
-                     title=None, text=None, body=None):
-                urls.append(u)
-                seqs.append(s)
-                depths.append(d)
-                kinds.append(kind)
-                lurl.append(l_url)
-                lpos.append(l_pos)
-                lgeo.append(l_geo)
-                titles.append(title)
-                texts.append(text)
-                bodies.append(body)
-
-            col_url = pdf["url"]
-            col_seq = pdf["seq"]
-            col_depth = pdf["depth"]
-            col_status = pdf["status"]
-            col_ct = pdf["content_type"]
-            col_html = pdf["html"]
-            for ridx in range(len(pdf)):
-                if col_status.iloc[ridx] != 200:
-                    continue
-                u = col_url.iloc[ridx]
-                ct = col_ct.iloc[ridx]
-                if ct in geo_mime_types:
-                    dl_body = None
-                    if carry_download_bytes:
-                        raw = col_html.iloc[ridx]
-                        dl_body = None if raw is None else bytes(raw)
-                    emit(u, col_seq.iloc[ridx], col_depth.iloc[ridx], 0,
-                         body=dl_body)
-                    continue
-                depth = col_depth.iloc[ridx]
-                h = col_html.iloc[ridx]
-                if h is None:
-                    continue
-                seq = col_seq.iloc[ridx]
-                if collect_text:
-                    md = extract_metadata(bytes(h), u)
-                    emit(u, seq, depth, 2,
-                         title=md["title"], text=md["description"])
-                if depth + 1 >= max_depth:
-                    continue
-                links = extract_links(bytes(h), u)
-                for link in links:
-                    emit(u, seq, depth, 1, l_url=link["url"],
-                         l_pos=link["pos"], l_geo=link["is_geo"])
-            yield pd.DataFrame(
-                {
-                    "url": urls,
-                    "seq": pd.Series(seqs, dtype="int64"),
-                    "depth": pd.Series(depths, dtype="int32"),
-                    "kind": pd.Series(kinds, dtype="int32"),
-                    "link_url": lurl,
-                    "link_pos": pd.Series(lpos, dtype="object"),
-                    "link_is_geo": lgeo,
-                    "title": pd.Series(titles, dtype="object"),
-                    "text": pd.Series(texts, dtype="object"),
-                    "body": pd.Series(bodies, dtype="object"),
-                }
-            )
+    def row(url, seq, depth, status, content_type, html):
+        if status != 200:
+            return ()
+        if content_type in geo_mime_types:
+            body = html if carry_download_bytes else None
+            return ((url, seq, depth, 0, *no_link, None, None, body),)
+        if html is None:
+            return ()
+        out = []
+        if collect_text:
+            md = extract_metadata(html, url)
+            out.append((url, seq, depth, 2, *no_link,
+                        md["title"], md["description"], None))
+        if depth + 1 < max_depth:
+            out += _link_rows(html, url, (url, seq, depth, 1), no_meta)
+        return out
 
     cols = ["url", "seq", "depth", "status", "content_type", "html"]
-    return fetched.select(*cols).mapInPandas(gen, ROUND_OUT_SCHEMA)
+    return _map_rows(fetched.select(*cols), ROUND_OUT_SCHEMA, row)

@@ -10,14 +10,15 @@ becomes a deterministic driver loop where each round is one DataFrame DAG
       → global seq assignment (two-pass distributed rank)             [§8.2]
       → budget cut                                                    [F10]
       → fetch = left join against the pages table                     [S1]
-      → branch: geo-MIME → downloads sink; non-200 → leaf             [F5/F7]
-      → extract_links (Arrow UDF) + posexplode, depth gate            [X1/F4]
+      → ONE fused Arrow pass over the fetched slice:           [F5/F7/X1/F4]
+        geo-MIME → download row; non-200 → leaf;
+        html → depth-gated link rows in document order (+ text rows)
       → next frontier; seen ∪ recorded; lineage row                   [U1/K4]
       → (optional) snapshot commit → exact resume                     [K5]
 
 Scale notes (the 1000-executor / 10^10-frontier design point):
 
-* the only Python on the hot path is the Arrow-batched extraction UDF;
+* the only Python on the hot path is the Arrow-batched extraction pass;
 * no driver-side loops over rows — driver actions are per-round counts only;
 * seq assignment avoids the single-reducer global window (functions.ordering);
 * the seen set is keyed by ``xxhash64(canonical_url)`` and the anti-join can
@@ -61,6 +62,20 @@ LINEAGE_SCHEMA = (
     "round int, partition_id int, urls_fetched long, bytes_fetched long, "
     "dedup_hits long, candidates long, recorded long"
 )
+
+
+def _seed_frontier(seeds: DataFrame) -> DataFrame:
+    """Depth-0 frontier rows for ``seeds`` (seed_order, url, …): no parent,
+    ``parent_seq=-1`` and entry order ``pos = seed_order``
+    (``crawler.go:37-43``)."""
+    return seeds.select(
+        F.col("url"),
+        F.lit(0).cast("int").alias("depth"),
+        F.lit(None).cast("string").alias("parent_url"),
+        F.lit(-1).cast("long").alias("parent_seq"),
+        F.col("seed_order").cast("int").alias("pos"),
+        F.lit(False).alias("is_geo"),
+    )
 
 
 @dataclass
@@ -110,14 +125,7 @@ class CrawlEngine:
     def run(self, seeds: DataFrame) -> CrawlRun:
         """``seeds``: (seed_order int, url string, …). Depth-0 entry order is
         seed_order (``crawler.go:37-43``)."""
-        frontier = seeds.select(
-            F.col("url"),
-            F.lit(0).cast("int").alias("depth"),
-            F.lit(None).cast("string").alias("parent_url"),
-            F.lit(-1).cast("long").alias("parent_seq"),
-            F.col("seed_order").cast("int").alias("pos"),
-            F.lit(False).alias("is_geo"),
-        )
+        frontier = _seed_frontier(seeds)
         seen = self.spark.createDataFrame([], "url string, url_hash long")
         return self._loop(frontier, seen, start_round=0, recorded_total=0,
                           trace_parts=[], download_parts=[], text_parts=[],
@@ -146,14 +154,7 @@ class CrawlEngine:
         (operators.seen.ShardedCuckooSeenFilter: insert on crawl, delete
         on TTL expiry), where a rebuild would double-insert the surviving
         fingerprints and waste capacity."""
-        frontier = seeds.select(
-            F.col("url"),
-            F.lit(0).cast("int").alias("depth"),
-            F.lit(None).cast("string").alias("parent_url"),
-            F.lit(-1).cast("long").alias("parent_seq"),
-            F.col("seed_order").cast("int").alias("pos"),
-            F.lit(False).alias("is_geo"),
-        )
+        frontier = _seed_frontier(seeds)
         seen = seen_urls.select(
             F.col("url"), url_hash(F.col("url")).alias("url_hash")
         )
@@ -197,14 +198,9 @@ class CrawlEngine:
             # frontier and the loop exits WITHOUT committing an empty
             # round — foreachBatch replays become true no-ops
             frontier = frontier.unionByName(
-                extra_seeds.select(
-                    F.col("url"),
-                    F.lit(0).cast("int").alias("depth"),
-                    F.lit(None).cast("string").alias("parent_url"),
-                    F.lit(-1).cast("long").alias("parent_seq"),
-                    F.col("seed_order").cast("int").alias("pos"),
-                    F.lit(False).alias("is_geo"),
-                ).join(seen.select("url"), "url", "left_anti")
+                _seed_frontier(extra_seeds).join(
+                    seen.select("url"), "url", "left_anti"
+                )
             )
         if self.seen_filter is not None:
             # the bloom's bits are in-memory state: rebuild from the seen
@@ -291,10 +287,7 @@ class CrawlEngine:
         # deferred slice re-enters incremented. Threaded ONLY when the
         # scheduler ages: at boost 0 no _wait column exists anywhere and
         # the plan is bit-identical to the pre-aging engine.
-        aging = bool(
-            self.scheduler is not None
-            and getattr(self.scheduler, "age_boost", 0)
-        )
+        aging = bool(self.scheduler is not None and self.scheduler.age_boost)
         if aging and "_wait" not in frontier.columns:
             frontier = frontier.withColumn("_wait", F.lit(0).cast("int"))
         rnd = start_round
@@ -445,7 +438,7 @@ class CrawlEngine:
                     "_wait", F.lit(0).cast("int")
                 )
             # politeness deferral: host-budget overflow re-enters the frontier
-            if self.scheduler is not None and getattr(self.scheduler, "deferred", None) is not None:
+            if self.scheduler is not None and self.scheduler.deferred is not None:
                 next_frontier = next_frontier.unionByName(
                     self.scheduler.deferred.select(*next_frontier.columns)
                 ).localCheckpoint(eager=True)
@@ -513,9 +506,9 @@ class CrawlEngine:
         # single-round by construction (each round releases the previous);
         # release the final round's too — everything downstream of them was
         # materialized by that round's eager checkpoint
-        if self.seen_filter is not None and hasattr(self.seen_filter, "release"):
+        if self.seen_filter is not None:
             self.seen_filter.release()
-        if self.scheduler is not None and hasattr(self.scheduler, "release"):
+        if self.scheduler is not None:
             self.scheduler.release()
 
         spark = self.spark

@@ -6,7 +6,13 @@ Defaults chosen for the 100 TB design point and scaled-down local testing:
 * shuffle partitions sized to the parallelism level (not the 200 default),
 * Arrow execution on with a bounded record batch size (HTML pages are
   kilobytes each — unbounded 10k-row batches would blow executor memory),
-* UTC session timezone (oracle comparisons against DuckDB are UTC-naive).
+* UTC session timezone (oracle comparisons against DuckDB are UTC-naive),
+* a driver heap made resident as it is committed (``AlwaysPreTouch``).
+  Spark's per-stage broadcast and task buffers are 1–16 MB humongous
+  objects; whether G1's adaptive IHOP starts concurrent cycles on them
+  depends on the JVM's start-up timing, so without it the driver's peak
+  RSS on a fixed (``-Xms`` = ``-Xmx``) heap lands at one of two levels,
+  ~15% apart, from run to run.
 """
 
 from __future__ import annotations
@@ -49,6 +55,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config("spark.driver.defaultJavaOptions", "-XX:+AlwaysPreTouch")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

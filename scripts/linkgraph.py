@@ -20,7 +20,8 @@ queries value-check; the CLI only wires them together.
 
 Node ids are xxhash64(url) (host ids xxhash64(host)) — deterministic,
 join-free, collision odds ~n²/2^64; the urlmap/ (and hostmap/) outputs
-carry the id↔string mapping so every report is joinable back. PageRank
+carry the id↔string mapping so every report is joinable back (hostmap
+covers the hosts of crawled pages and of every link target). PageRank
 output can feed scripts/crawl.py --rank-table after an id→url join.
 """
 
@@ -120,14 +121,22 @@ def main() -> None:
         ).write.mode("overwrite").parquet(f"{args.output}/kcore")
         done.append("kcore")
     if "spam" in want:
+        host_links = links.select(
+            url_host(F.col("url")).alias("src_host"),
+            url_host(F.col("link_url")).alias("dst_host"),
+        ).localCheckpoint()
+        # page hosts ∪ link-target hosts: the spam report's dst/top_dst
+        # ids include external hosts no crawled page lives on
         hosts = (
-            pages.select(url_host(F.col("url")).alias("host")).distinct()
+            pages.select(url_host(F.col("url")).alias("host"))
+            .unionByName(host_links.select(F.col("dst_host").alias("host")))
+            .distinct()
             .withColumn("host_id", F.xxhash64("host"))
         )
         hosts.write.mode("overwrite").parquet(f"{args.output}/hostmap")
-        he = links.select(
-            F.xxhash64(url_host(F.col("url"))).alias("src"),
-            F.xxhash64(url_host(F.col("link_url"))).alias("dst"),
+        he = host_links.select(
+            F.xxhash64("src_host").alias("src"),
+            F.xxhash64("dst_host").alias("dst"),
         )
         linkspam.host_link_report(he).write.mode("overwrite").parquet(
             f"{args.output}/spam"

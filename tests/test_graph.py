@@ -898,3 +898,39 @@ def test_graph_summary_no_edges_between_loops(spark):
     assert got["n_edges"] == 0 and got["n_self_loops"] == 1
     assert got["n_nodes"] == 1 and got["recip_ppm"] == 0
     assert got["n_dangling"] == 0  # the self-loop IS an outlink
+
+
+def test_linkgraph_hostmap_covers_external_link_targets(spark, tmp_path,
+                                                        monkeypatch):
+    # scripts/linkgraph.py: every host id the spam report names — source
+    # hosts and external top_dst hosts no crawled page lives on — has a
+    # hostmap row, so the report is joinable back to host strings
+    import runpy
+    import sys
+    from pathlib import Path
+
+    pages = spark.createDataFrame(
+        [
+            ("https://a.example.org/1.html",
+             b'<a href="/2.html">2</a><a href="https://ext.example.net/x">x</a>'),
+            ("https://a.example.org/2.html",
+             b'<a href="https://ext.example.net/y">y</a>'),
+        ],
+        "url string, html binary",
+    )
+    pages.write.parquet(str(tmp_path / "pages"))
+    out = tmp_path / "out"
+    script = Path(__file__).resolve().parents[1] / "scripts" / "linkgraph.py"
+    monkeypatch.setattr(sys, "argv", [
+        str(script), "--pages", str(tmp_path / "pages"),
+        "--output", str(out), "--reports", "spam",
+    ])
+    runpy.run_path(str(script), run_name="__main__")
+
+    hostmap = {
+        r["host_id"]: r["host"]
+        for r in spark.read.parquet(str(out / "hostmap")).collect()
+    }
+    spam = spark.read.parquet(str(out / "spam")).collect()
+    assert [hostmap[r["host_id"]] for r in spam] == ["a.example.org"]
+    assert hostmap[spam[0]["top_dst"]] == "ext.example.net"

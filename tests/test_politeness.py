@@ -378,33 +378,40 @@ def test_age_boost_zero_emits_identical_oracle_sql():
 
 
 def test_age_boost_zero_scheduler_matches_plain(spark):
-    # age_boost=0 must be bit-identical to the pre-aging scheduler
-    from geospatial_web_scraper_spark import corpus
-    from geospatial_web_scraper_spark.operators.politeness import (
-        PolitenessScheduler,
-    )
-    from geospatial_web_scraper_spark.plans.bfs import CrawlEngine
+    # age_boost=0 must be the pre-aging scheduler: no _wait column reaches
+    # the scheduler's input or its deferred slice in any round, and the
+    # deferring crawl equals the python oracle's priority mode exactly
+    from geospatial_web_scraper_spark.oracle import crawl_oracle
 
-    def _trace(boost):
-        sched = PolitenessScheduler(
-            default_tokens_per_round=2,
-            defer_overflow=True,
-            tiebreak="url",
-            age_boost=boost,
-        )
-        eng = CrawlEngine(
-            spark, corpus.corpus_df(spark, 300), max_crawl=60,
-            lineage_detail=False, scheduler=sched,
-        )
-        run = eng.run(corpus.seeds_df(spark, 300))
-        return [
-            tuple(r)
-            for r in run.trace.select("seq", "url", "round")
-            .orderBy("seq")
-            .collect()
-        ]
+    n = 300
+    columns = []
 
-    assert _trace(0) == _trace(None or 0)
+    class Recording(PolitenessScheduler):
+        def apply(self, df, rnd):
+            admitted = super().apply(df, rnd)
+            columns.append(df.columns)
+            if self.deferred is not None:
+                columns.append(self.deferred.columns)
+            return admitted
+
+    sched = Recording(default_tokens_per_round=2, age_boost=0)
+    run = CrawlEngine(
+        spark, corpus.corpus_df(spark, n), max_crawl=60,
+        lineage_detail=False, scheduler=sched,
+    ).run(corpus.seeds_df(spark, n))
+    got = [
+        (r["seq"], r["url"], r["depth"], r["parent_url"], r["round"])
+        for r in run.trace.orderBy("seq").collect()
+    ]
+    assert len(columns) > 2
+    assert not [c for c in columns if "_wait" in c]
+    want = crawl_oracle(
+        corpus.pages_dict(n),
+        [corpus.url_of(i) for i in corpus.seed_ids(n)],
+        max_crawl=60,
+        scheduler=dict(default_tokens=2),
+    ).trace
+    assert got == want, (got[:5], want[:5])
 
 
 def test_aging_admits_starved_urls_earlier(spark):

@@ -128,23 +128,18 @@ def test_warc_pages_drive_extraction(spark, page_rows, tmp_path):
     """Pages read from WARC are drop-in for the extraction kernel: link
     extraction over the WARC-sourced table equals extraction over the
     native corpus table."""
-    from geospatial_web_scraper_spark.operators.extract import extract_links_udf
+    from geospatial_web_scraper_spark.operators.extract import extract_links_flat
 
     (tmp_path / "c.warc.gz").write_bytes(_to_warc(page_rows, gz=True))
     warc_pages = pages_from_warc(spark, str(tmp_path))
-    a = (
-        warc_pages.select(
-            "url", F.explode(extract_links_udf("html", "url")).alias("link")
-        )
-        .orderBy("url", "link")
-        .collect()
-    )
-    b = (
-        corpus.corpus_df(spark, N)
-        .select("url", F.explode(extract_links_udf("html", "url")).alias("link"))
-        .orderBy("url", "link")
-        .collect()
-    )
+
+    def links(pages):
+        flat = extract_links_flat(pages, carry_cols=["url"])
+        return flat.orderBy("url", "link_pos").collect()
+
+    a = links(warc_pages)
+    b = links(corpus.corpus_df(spark, N))
+    assert a
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
 
 
